@@ -42,7 +42,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # (tests/conftest.py::catalog_dfs). Concretely: no spark.conf.set, no
 # setLocalProperty, no unguarded eager materialization inside a
 # (spark, sf_dir) -> DataFrame callable. Entries that MUST materialize
-# at build time guard with their own lock (dedup._MATERIALIZED_LOCK)
+# at build time do it inside a memo build (memo.py), under its lock,
 # or are excluded by documented exception (sink_parquet). Session
 # confs the semantics rely on go through conf.ensure_runtime_confs
 # (idempotent set-if-different at the CONTRACT entry points, not per

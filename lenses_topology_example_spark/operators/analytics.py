@@ -25,7 +25,9 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from ..memo import persisted
 from ..tables import load_table
+from .dedup import BLOOM_WORDS, _bloom_positions_exprs
 from .relational import dsum2_sql, dsum_sql
 from .similarity import as_double, dot, sql_dot
 
@@ -989,7 +991,6 @@ def q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.2M-pair support join recomputed six times to re-derive a ~3.6k-
     row frame. Materializing it once is the write-once edge-list table
     any production triangle count reads."""
-    from .dedup import _memo_persist
     from .relational2 import basket_pair_support
 
     # round 17: the Σ_orders k²/2 pair self-join + support aggregation
@@ -997,7 +998,7 @@ def q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # q_basket_lift — r15 ADVICE: a single construction site so the two
     # consumers cannot drift); the pruned edge list is still its own
     # memo because SIX consumers below read it
-    edges = _memo_persist(
+    edges = persisted(
         spark,
         sf_dir,
         "copurchase_edges",
@@ -1506,8 +1507,6 @@ def q_bloom_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     argument, applied to join pruning); the probe is pure row
     arithmetic inside the lineitem scan; the exact semi-join runs once
     as the audit's truth column."""
-    from .dedup import BLOOM_WORDS, _bloom_positions_exprs
-
     urgent = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") == "1-URGENT")
@@ -1586,8 +1585,6 @@ def q_bloom_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_sql_bloom_join_audit() -> str:
-    from .dedup import _bloom_positions_exprs
-
     h = "(('0x' || substr(md5(CAST(k AS VARCHAR)), 1, 15))::BIGINT)"
     pos = [
         p.replace(" div ", " // ") for p in _bloom_positions_exprs(h)

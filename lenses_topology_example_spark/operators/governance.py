@@ -25,7 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.texthash import SQL_MD5_HASH64
-from ..tables import load_table
+from ..memo import persisted
+from ..tables import load_table, parallel_scan
 from .relational import dsum, dsum4_sql, dsum_sql
 
 
@@ -69,9 +70,7 @@ def q_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     table a production run materializes before a multi-check pass) and
     each fused aggregate emits ALL its report rows in one stack()
     unpivot instead of one .select per row."""
-    from .dedup import _memo_persist
-
-    li = _memo_persist(
+    li = persisted(
         spark,
         sf_dir,
         "audit_lineitem_proj",
@@ -83,7 +82,7 @@ def q_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_shipdate",
         ),
     )
-    orders = _memo_persist(
+    orders = persisted(
         spark,
         sf_dir,
         "audit_orders_proj",
@@ -863,13 +862,11 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     battery compiles to Spark's Expand (|columns| x rows map-side,
     partial-agged before the exchange) — the standard profiling cost;
     the unpivot emits |columns| rows. The Expand inflation is pure
-    scan-side compute, so the scan is _parallel_scan-guarded (r17: on
+    scan-side compute, so the scan is parallel_scan-guarded (measured: on
     the single-row-group testdata layout the whole |columns| x rows
     pass ran on ONE task, 4-7 s at sf0.1; the guard is a no-op on any
     multi-split scan)."""
-    from .dedup import _parallel_scan
-
-    od = _parallel_scan(spark, load_table(spark, sf_dir, "orders"))
+    od = parallel_scan(spark, load_table(spark, sf_dir, "orders"))
     ts_fmt = "yyyy-MM-dd HH:mm:ss"
 
     def prof(col: str, mn, mx):

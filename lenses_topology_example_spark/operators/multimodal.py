@@ -24,7 +24,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..tables import load_table
+from ..tables import load_table, parallel_scan
 
 FEATURE_SCHEMA = (
     "doc_id long, n_bytes int, width int, height int, n_frames int"
@@ -48,9 +48,7 @@ def binary_assets(
     multi-split scan the guard is a no-op either way."""
     docs = load_table(spark, sf_dir, "documents")
     if parallel:
-        from .dedup import _parallel_scan
-
-        docs = _parallel_scan(spark, docs)
+        docs = parallel_scan(spark, docs)
     return docs.select(
         "doc_id",
         F.encode(F.col("text"), "utf-8").alias("payload"),
@@ -574,9 +572,7 @@ def q_asset_png_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     uncompressed container (BMP), a chunked audio container (WAV), and
     a compressed image container (PNG) — only lossy formats (JPEG,
     video) remain env-gated on PIL/ffmpeg in decode_image above."""
-    from .dedup import _parallel_scan
-
-    docs = _parallel_scan(
+    docs = parallel_scan(
         spark,
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "n_chars")
@@ -678,9 +674,7 @@ def q_asset_quality_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE division of exact int64 counts, identical on both engines."""
     from ..functions.codecs import make_png, parse_png
 
-    from .dedup import _parallel_scan
-
-    docs = _parallel_scan(
+    docs = parallel_scan(
         spark,
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "n_chars", "source")
@@ -791,9 +785,7 @@ def q_asset_gif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one scan, mapInPandas Arrow batches, zero shuffles,
     one row per asset."""
-    from .dedup import _parallel_scan
-
-    docs = _parallel_scan(
+    docs = parallel_scan(
         spark,
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "n_chars")

@@ -41,7 +41,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..functions.texthash import SQL_MD5_HASH64, md5_hash64
 from ..tables import load_table
-from .dedup import SQL_TOKS
+from .dedup import (
+    SQL_DEDUP_NEAR_CAPPED,
+    SQL_TOKS,
+    cluster_labels,
+    neardup_pairs,
+)
 from .text import _sql_stoplist, _STOPWORDS
 from .wordcount import tokens_col
 
@@ -459,8 +464,6 @@ def q_split_leak_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     per session / stored at scale); split labels are the same salted
     md5 rule as q_dataset_split; the (split, split) matrix is <= 6
     rows after a LEAST/GREATEST canonicalization."""
-    from .dedup import neardup_pairs
-
     pairs = neardup_pairs(spark, sf_dir)
 
     def split_of(doc_id: Column) -> Column:
@@ -504,8 +507,6 @@ def _sql_split_case(doc: str) -> str:
 
 
 def _sql_split_leak_check() -> str:
-    from .dedup import SQL_DEDUP_NEAR_CAPPED
-
     return f"""
     WITH pairs AS (
         SELECT doc_a, doc_b FROM ({SQL_DEDUP_NEAR_CAPPED})
@@ -541,8 +542,6 @@ def q_dataset_split_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     + coalesce onto the corpus — docs outside any pair never shuffle
     into the label frame); the rest is q_dataset_split's single scan +
     3x|sources| aggregation."""
-    from .dedup import cluster_labels
-
     labels = cluster_labels(spark, sf_dir).select(
         F.col("doc").alias("doc_id"), F.col("label").alias("cluster_id")
     )
@@ -574,8 +573,6 @@ def q_dataset_split_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_dataset_split_by_cluster() -> str:
-    from .dedup import SQL_DEDUP_NEAR_CAPPED
-
     bucket = SQL_MD5_HASH64.format(x="'split|' || CAST(split_key AS VARCHAR)")
     return f"""
     WITH RECURSIVE pairs AS (
@@ -627,8 +624,6 @@ def q_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan; the report is |sources| rows. A doc counts toward its OWN
     source even when its keeper lives elsewhere — savings are
     attributed where the bytes are dropped."""
-    from .dedup import cluster_labels
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
@@ -677,8 +672,6 @@ def q_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_dedup_savings() -> str:
-    from .dedup import SQL_DEDUP_NEAR_CAPPED
-
     return f"""
     WITH RECURSIVE pairs AS (
         SELECT doc_a, doc_b FROM ({SQL_DEDUP_NEAR_CAPPED})

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
-from ..tables import load_table
+from ..tables import load_table, parallel_scan
 
 
 def dsum(col: Column) -> Column:
@@ -86,12 +86,10 @@ def q_agg_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Filter + 7-column projection push into the parquet scan; partial
     HashAggregate collapses before the 6-key shuffle. The partial
     aggregate's decimal work is pure scan-side compute, so the filtered
-    projection is _parallel_scan-guarded (r17 measurement: 2.08 s
+    projection is parallel_scan-guarded (measured: 2.08 s
     single-task vs 1.36 s guarded on the one-row-group layout; the
     guard is a no-op on any multi-split scan)."""
-    from .dedup import _parallel_scan
-
-    li = _parallel_scan(
+    li = parallel_scan(
         spark,
         load_table(spark, sf_dir, "lineitem")
         .filter(

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from ..memo import persisted
 from ..tables import load_table
 from .relational import dsum, dsum_sql
 
@@ -878,9 +879,7 @@ def order_part_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently constructing a plan under a shared memo key means
     first-built-wins; an edit to one site's projection would silently
     serve the other a stale, different frame)."""
-    from .dedup import _memo_persist
-
-    return _memo_persist(
+    return persisted(
         spark,
         sf_dir,
         "order_part_distinct",
@@ -904,8 +903,6 @@ def basket_pair_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot silently serve the other a wrongly-pruned frame. This is the
     write-once pair-support table a production basket pipeline
     materializes before fanning out to recommenders and graph reports."""
-    from .dedup import _memo_persist
-
     def build() -> DataFrame:
         floor = min(BASKET_MIN_SUPPORT, TRI_MIN_SUPPORT)
         li = order_part_distinct(spark, sf_dir)
@@ -923,7 +920,7 @@ def basket_pair_support(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("support") >= F.lit(floor))
         )
 
-    return _memo_persist(spark, sf_dir, "basket_pair_support", build)
+    return persisted(spark, sf_dir, "basket_pair_support", build)
 
 
 def q_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:

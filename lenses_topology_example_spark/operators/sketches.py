@@ -28,7 +28,9 @@ import pandas as pd  # module-level: pandas_udf resolves stringified hints here
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..tables import load_table
+from ..memo import persisted
+from ..tables import load_table, parallel_scan
+from .dedup import _doc_tokens
 
 
 def approx_distinct_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -478,8 +480,6 @@ def q_cms_token_freq(
     row_number window here would; tests/test_plans.py pins the
     window-free shape). Tie-breaking (exact_n desc, token asc) is a
     total order, so the selected set is deterministic."""
-    from .dedup import _doc_tokens
-
     # both the counter fold and the exact counts ride the memoized,
     # parallelism-guarded token table (r17): the prior form tokenized
     # the raw documents scan twice, single-task on a one-row-group file
@@ -658,7 +658,7 @@ def q_cms_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     only key-grain work — two keyed aggs and a bounded key join (at
     100 TB the audit runs on a sample day while the sketches run on
     everything; here both run in full so the oracle can pin them)."""
-    # NOT _parallel_scan-guarded (r17 measurement): repartitioning the
+    # NOT parallel_scan-guarded (measured): repartitioning the
     # two projected key scans traded the single-task md5 battery
     # (~0.5 s) for two extra exchanges plus 350 more tasks of
     # scheduling — isolated exec time was unchanged (2.1 s both ways),
@@ -790,14 +790,12 @@ def q_bootstrap_stderr(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOOT_B rows; stderr is a window over it (tiny-frame class)."""
     from pyspark.sql import Window as W
 
-    from .dedup import _parallel_scan
-
     # 2·BOOT_B md5-coin aggregates are pure scan-side compute; on a
     # single-row-group input layout the whole battery runs on ONE task
     # (r17 measurement: ~2 s single-threaded at sf0.1), so guard the
-    # projected 2-column frame with the _parallel_scan contract — a
+    # projected 2-column frame with the parallel_scan contract — a
     # no-op metadata check whenever the scan already has splits.
-    od = _parallel_scan(
+    od = parallel_scan(
         spark,
         load_table(spark, sf_dir, "orders").select(
             F.col("o_orderkey").cast("string").alias("key"),
@@ -957,9 +955,7 @@ def events_nonnull_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     persist, so the cache holds exactly the pruned value space both
     contracts pin (round-14 NULL-ordering class) — at any scale this is
     the staged audit table a production run materializes once."""
-    from .dedup import _memo_persist
-
-    return _memo_persist(
+    return persisted(
         spark,
         sf_dir,
         "events_nonnull_values",

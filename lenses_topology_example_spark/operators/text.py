@@ -17,8 +17,15 @@ from ..functions.texthash import (
     polynomial_fingerprint,
     sql_polynomial_fingerprint,
 )
-from ..tables import load_table
-from .dedup import SQL_TOKS
+from ..memo import persisted
+from ..tables import load_table, parallel_scan
+from .dedup import (
+    SQL_DEDUP_NEAR_CAPPED,
+    SQL_TOKS,
+    _doc_tokens,
+    cluster_labels,
+    shingles_col,
+)
 from .wordcount import tokens_col
 
 # --- token counting -----------------------------------------------------------
@@ -101,14 +108,12 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     language's marker list, predict argmax (deterministic tie order).
     A real deployment swaps the marker lists for character-n-gram
     profiles; the dataflow (per-doc map, no shuffle) is identical."""
-    from .dedup import _parallel_scan
-
     # parallel-guarded (r18, measured on the 100x doc slice): the four
     # per-row language-score folds are heavy map work, and the slice
     # ships as ONE file with 5 row groups, so the scan capped at 5
     # tasks — 31-33 s at c32 with a c8/c32 ratio of ~1 (serial), vs
     # guarded parallel scoring. A no-op on any multi-split scan.
-    docs = _parallel_scan(spark, load_table(spark, sf_dir, "documents"))
+    docs = parallel_scan(spark, load_table(spark, sf_dir, "documents"))
     sc = lang_scores(F.col("text"))
     best = pred_lang_col(F.col("text"))
     return docs.select(
@@ -322,8 +327,6 @@ def q_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     PROJECTED token array via the shared slice+zip shingle helper —
     Generate-shaped fan-out, shuffle bounded by |distinct bigrams|.
     Top-100 head."""
-    from .dedup import shingles_col
-
     docs = load_table(spark, sf_dir, "documents")
     # tokens PROJECTED once before the fan-out — inlining the regex
     # split into a per-element lambda re-evaluated it per token
@@ -527,15 +530,13 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     break by term ascending."""
     from pyspark.sql import Window as W
 
-    from .dedup import _parallel_scan
-
     docs = load_table(spark, sf_dir, "documents")
     # parallel-guarded tokenize+explode (r18, measured on the 100x doc
     # slice: the map stage capped at the slice's 5 row groups — 36-57 s
     # at c32, c8/c32 ~1). The 1-row N aggregate keeps the plain scan
     # (counting rows needs no spread).
     td = (
-        _parallel_scan(spark, docs)
+        parallel_scan(spark, docs)
         .select("doc_id", F.explode(tokens_col(F.col("text"))).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -727,8 +728,6 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet-scan speed inside codegen. (A naive per-distinct-bigram
     count-filter fold would be O(k^2) per doc — quadratic in document
     length — which is why the sorted-run form is the contract.)"""
-    from .dedup import shingles_col
-
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
@@ -1256,8 +1255,6 @@ def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     addends keep the per-doc sum order-independent."""
     from pyspark.sql import Window as W
 
-    from .dedup import shingles_col
-
     docs = load_table(spark, sf_dir, "documents")
     exploded = docs.select(
         "doc_id",
@@ -1708,8 +1705,6 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-ran per element access, O(L²) per doc (the round-5 blowup
     # dedup.py documents; measured here: 8 s suite floor at sf0.1 vs
     # ~1 s from the materialized table).
-    from .dedup import _doc_tokens
-
     docs = _doc_tokens(spark, sf_dir).select("doc_id", "t")
     toks = F.col("t")
     grams = F.when(
@@ -1828,8 +1823,6 @@ def q_corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     from ..functions.texthash import md5_hash64
-    from .dedup import _doc_tokens
-
     toks = _doc_tokens(spark, sf_dir).select(
         "doc_id",
         (md5_hash64(F.col("doc_id").cast("string")) % 2).alias("p"),
@@ -1928,8 +1921,6 @@ def q_doc_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc; the md5 runs over token slices, never re-tokenizing (the
     CollapseProject hazard is void because `t` is a persisted column).
     """
-    from .dedup import _doc_tokens
-
     toks = _doc_tokens(spark, sf_dir).select("doc_id", "t")
     L = F.size(F.col("t"))
     n_chunks = F.when(
@@ -2013,8 +2004,6 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     slices collapses into MAX flags inside the same aggregation.
     """
     from ..functions.texthash import md5_hash64
-    from .dedup import _doc_tokens
-
     def gram_arr(n: int):
         cnt = F.size(F.col("t")) - F.lit(n - 1)
         return F.when(
@@ -2135,8 +2124,6 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    from .dedup import _doc_tokens
-
     all_terms = sorted({t for _, ts in BM25_QUERIES for t in ts})
     qmap = spark.createDataFrame(
         [(q, t) for q, ts in BM25_QUERIES for t in ts],
@@ -2215,9 +2202,7 @@ def bm25_topk_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the write-once ranking table a retrieval stack stores once and
     every fusion/eval pass reads — which is exactly how hybrid search
     engines persist per-leg rankings before fusing."""
-    from .dedup import _memo_persist
-
-    return _memo_persist(
+    return persisted(
         spark, sf_dir, "bm25_topk", lambda: q_bm25_search(spark, sf_dir)
     )
 
@@ -2607,8 +2592,6 @@ def q_dedup_keeper_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression joined on doc_id; the rank window partitions by
     cluster_id (bounded fan-in — the df-cap bounds component sizes).
     """
-    from .dedup import cluster_labels
-
     labels = cluster_labels(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     c = quality_components(F.col("text"))
@@ -2681,8 +2664,6 @@ SQL_DEDUP_KEEPER_QUALITY = f"""
 
 
 def _splice_near_capped() -> str:
-    from .dedup import SQL_DEDUP_NEAR_CAPPED
-
     return SQL_DEDUP_KEEPER_QUALITY.replace(
         "{near_capped}", SQL_DEDUP_NEAR_CAPPED
     )
@@ -3115,8 +3096,6 @@ def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is why real BPE trainers operate on it. Top-k is orderBy +
     limit => TakeOrderedAndProject (per-partition local top-k, no
     global window funnel — the cms_token_freq discipline)."""
-    from .dedup import _doc_tokens
-
     vocab = (
         _doc_tokens(spark, sf_dir)
         .select(F.explode(F.col("t")).alias("token"))
@@ -3196,8 +3175,6 @@ def q_topic_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     are windows over that bounded frame; |V| broadcasts as the repo's
     1-row scalar; top-k per source is WindowGroupLimit."""
     from pyspark.sql import Window as W
-
-    from .dedup import _doc_tokens
 
     toks = _doc_tokens(spark, sf_dir).select(
         "source", F.explode(F.col("t")).alias("token")
@@ -3315,8 +3292,6 @@ def q_negative_sampling_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (100 TB): one corpus scan collapses to the
     |vocabulary|-bounded frame map-side; the pow/share/keep arithmetic
     runs on that bounded frame with a 1-row broadcast total."""
-    from .dedup import _doc_tokens
-
     toks = _doc_tokens(spark, sf_dir).select(
         F.explode(F.col("t")).alias("token")
     )

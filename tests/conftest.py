@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import sys
 
@@ -7,9 +9,34 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from lenses_topology_example_spark import memo
 from lenses_topology_example_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+def formatted_plan(df) -> str:
+    """``df.explain("formatted")`` captured as a string."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def evict_memos(spark, sf_dir: str) -> None:
+    """Drop (and unpersist, best-effort) every session memo entry of
+    this session for ``sf_dir``, so the next call rebuilds it — a test
+    that varies an input behind a memoized frame must not be served the
+    frame an earlier run cached."""
+    app_id = spark.sparkContext.applicationId
+    with memo._LOCK:
+        for k in [
+            k for k in memo._ENTRIES if k[0] == app_id and k[1][0] == sf_dir
+        ]:
+            try:
+                memo._ENTRIES.pop(k).unpersist()
+            except Exception:
+                pass
 
 
 @pytest.fixture(scope="session")
@@ -49,7 +76,7 @@ def catalog_dfs(spark, sf_dir):
     # rest of the run). 8 is the measured optimum; don't re-raise
     # without timing the WHOLE suite. Entries that build
     # eagerly (fixpoint resolvers, memoized persists) are thread-safe
-    # by their own locks (dedup._MATERIALIZED_LOCK).
+    # through the memo lock (memo.py).
     names = [n for n in _CATALOG if n != "sink_parquet"]
 
     def build(name):

@@ -4,10 +4,15 @@ actually find what they claim to find."""
 
 from __future__ import annotations
 
+import sys
+import threading
+from concurrent.futures import ThreadPoolExecutor
+
 import pytest
 
 from pyspark.sql import functions as F
 
+from lenses_topology_example_spark import memo
 from lenses_topology_example_spark.operators.dedup import (
     q_dedup_exact,
     q_dedup_minhash,
@@ -15,6 +20,9 @@ from lenses_topology_example_spark.operators.dedup import (
     shingles_col,
 )
 from lenses_topology_example_spark.operators.wordcount import tokens_col
+from lenses_topology_example_spark.tables import load_table
+
+from .conftest import evict_memos
 
 _BASE = (
     "the quick brown fox jumps over the lazy dog near the river bank today"
@@ -129,17 +137,26 @@ def test_dedup_cluster_matches_fixpoint(spark, sf_dir):
     assert keepers == {c for _, c in got}
 
 
-def test_memo_eviction_only_stopped_sessions(spark, sf_dir):
-    """_memo_persist must not thrash entries of OTHER LIVE sessions
-    (round-2 ADVICE: eviction keyed on 'differs from current app'
-    re-persisted the victim's frames unboundedly): a foreign entry whose
-    context is alive survives the sweep; one whose context is
-    DEMONSTRABLY stopped (_jsc gone — the classic stop signature) is
-    unpersisted best-effort and dropped; and (round-3 ADVICE) one whose
-    liveness probe fails for an UNKNOWN reason (e.g. Spark Connect has
-    no _jsc chain at all) is KEPT — leak-on-doubt, never evict a
-    possibly-live foreign session's frame."""
-    from lenses_topology_example_spark.operators import dedup as D
+@pytest.fixture
+def fresh_sf_dir(spark, tmp_path):
+    """A tiny sf_dir no memo entry has seen: every first call misses."""
+    spark.range(1).write.parquet(str(tmp_path / "region.parquet"))
+    yield str(tmp_path)
+    evict_memos(spark, str(tmp_path))
+
+
+@pytest.mark.parametrize("entry", ["persisted", "load_table"])
+def test_memo_eviction_only_stopped_sessions(spark, fresh_sf_dir, entry):
+    """The memo sweep must not thrash entries of OTHER LIVE sessions
+    (eviction keyed on 'differs from current app' re-persisted the
+    victim's frames unboundedly): a foreign entry whose context is
+    alive survives the sweep; one whose context is DEMONSTRABLY stopped
+    (_jsc gone — the classic stop signature) is unpersisted best-effort
+    and dropped; and one whose liveness probe fails for an UNKNOWN
+    reason (e.g. Spark Connect has no _jsc chain at all) is KEPT —
+    leak-on-doubt, never evict a possibly-live foreign session's frame.
+    Both entry points (persisted frames and loaded tables) run the one
+    sweep on a miss."""
 
     class _StoppedFrame:
         # sparkSession.sparkContext._jsc is None == stopped context
@@ -173,25 +190,49 @@ def test_memo_eviction_only_stopped_sessions(spark, sf_dir):
             return self._s
 
     dead, unknown, live = _StoppedFrame(), _UnknownFrame(), _LiveFrame(spark)
-    dead_key = ("dead-app-id", "x", "k")
-    unknown_key = ("unknown-app-id", "x", "k")
-    live_key = ("other-live-app-id", "x", "k")
-    with D._MATERIALIZED_LOCK:
-        D._MATERIALIZED[dead_key] = dead
-        D._MATERIALIZED[unknown_key] = unknown
-        D._MATERIALIZED[live_key] = live
+    dead_key = ("dead-app-id", ("x", "k"))
+    unknown_key = ("unknown-app-id", ("x", "k"))
+    live_key = ("other-live-app-id", ("x", "k"))
+    with memo._LOCK:
+        memo._ENTRIES[dead_key] = dead
+        memo._ENTRIES[unknown_key] = unknown
+        memo._ENTRIES[live_key] = live
     try:
-        D._doc_tokens(spark, sf_dir)  # any memo call runs the sweep
-        with D._MATERIALIZED_LOCK:
-            assert dead_key not in D._MATERIALIZED
+        if entry == "persisted":
+            memo.persisted(spark, fresh_sf_dir, "k", lambda: spark.range(1))
+        else:
+            load_table(spark, fresh_sf_dir, "region")
+        with memo._LOCK:
+            assert dead_key not in memo._ENTRIES
             assert dead.unpersisted
-            assert unknown_key in D._MATERIALIZED
+            assert unknown_key in memo._ENTRIES
             assert not unknown.unpersisted
-            assert live_key in D._MATERIALIZED
+            assert live_key in memo._ENTRIES
     finally:
-        with D._MATERIALIZED_LOCK:
-            D._MATERIALIZED.pop(live_key, None)
-            D._MATERIALIZED.pop(unknown_key, None)
+        with memo._LOCK:
+            memo._ENTRIES.pop(live_key, None)
+            memo._ENTRIES.pop(unknown_key, None)
+
+
+def test_load_table_cold_key_builds_once_across_threads(spark, fresh_sf_dir):
+    """Eight threads released together onto a cold load_table key (the
+    shape of catalog_dfs's 8-thread build) must all get the SAME frame:
+    the memo builds under its lock, so no thread sees a second copy."""
+    barrier = threading.Barrier(8)
+
+    def load(_):
+        barrier.wait(timeout=60)
+        return load_table(spark, fresh_sf_dir, "region")
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the threads' check-then-act
+    try:
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            frames = list(ex.map(load, range(8), timeout=120))
+    finally:
+        sys.setswitchinterval(switch)
+    assert len(frames) == 8
+    assert len({id(f) for f in frames}) == 1
 
 
 def test_containment_catches_subset_jaccard_misses(spark, tmp_path):

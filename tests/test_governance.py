@@ -8,6 +8,8 @@ from collections import Counter
 
 from lenses_topology_example_spark.catalog import _CATALOG
 
+from .conftest import formatted_plan
+
 
 def test_scd2_invariants(spark, sf_dir):
     rows = _CATALOG["scd2_apply"][0](spark, sf_dir).collect()
@@ -175,15 +177,10 @@ def test_agg_delta_merge_plan_has_cutoff_split(spark, sf_dir):
     """Both branches must push their cutoff filter to the orders scan —
     the incremental contract is that the delta side reads only new
     partitions at scale."""
-    import contextlib
-    import io
     import re
 
     df = _CATALOG["agg_delta_merge"][0](spark, sf_dir)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
+    plan = formatted_plan(df)
     filters = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     assert any("LessThan(o_orderdate" in f for f in filters)
     assert any("GreaterThanOrEqual(o_orderdate" in f for f in filters)
@@ -331,14 +328,8 @@ def test_streaming_dq_empty_batch_reports_zero(spark, sf_dir):
 
 
 def test_top_paths_take_ordered(spark, sf_dir):
-    import contextlib
-    import io
-
     df = _CATALOG["top_paths"][0](spark, sf_dir)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    assert "TakeOrderedAndProject" in buf.getvalue()
+    assert "TakeOrderedAndProject" in formatted_plan(df)
 
 
 def test_erasure_plan_cascade_consistency(spark, sf_dir):

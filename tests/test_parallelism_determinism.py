@@ -12,31 +12,14 @@ per-module)."""
 from __future__ import annotations
 
 import math
+import sys
 
 import pytest
 
 from lenses_topology_example_spark import tables
-from lenses_topology_example_spark.operators import dedup, similarity
+from lenses_topology_example_spark.operators import similarity
 
-
-def _evict_memos(spark, sf_dir):
-    """Drop every session memo for this (app, sf_dir) so each
-    repartitioned run REBUILDS the memoized frames under the injected
-    partitioning (r17 ADVICE: the base run populated pagerank_frac /
-    emb_base / containment_pairs, so later runs consumed the cached
-    frame and the test passed vacuously)."""
-    app_id = spark.sparkContext.applicationId
-    with dedup._MATERIALIZED_LOCK:
-        for k in [
-            k
-            for k in dedup._MATERIALIZED
-            if k[0] == app_id and k[1] == sf_dir
-        ]:
-            try:
-                dedup._MATERIALIZED[k].unpersist()
-            except Exception:
-                pass
-            del dedup._MATERIALIZED[k]
+from .conftest import evict_memos
 
 
 def _canon_rows(df):
@@ -61,8 +44,11 @@ def _run_with_parts(spark, sf_dir, module, fn_name, n_parts):
     repartition is injected AFTER that frame instead — same lever
     (partial-aggregation accumulation order downstream of the input),
     and it sidesteps the memo, which would otherwise serve the first
-    run's partitioning to every later run."""
-    _evict_memos(spark, sf_dir)
+    run's partitioning to every later run. Every memo of this sf_dir is
+    evicted before and after, so each run REBUILDS the memoized frames
+    (pagerank_frac, emb_base, containment_pairs, ...) under the injected
+    partitioning instead of passing vacuously on the base run's."""
+    evict_memos(spark, sf_dir)
     patches = []  # (obj, attr, original) to restore
 
     def _patch(obj, attr, repl):
@@ -91,10 +77,15 @@ def _run_with_parts(spark, sf_dir, module, fn_name, n_parts):
     if hasattr(module, "emb_base"):
         _patch(module, "emb_base", repartitioned_base)
 
-    # _parallel_scan would re-repartition an injected 1-partition frame
-    # back to defaultParallelism (r17 ADVICE) — make it a pass-through
-    # so the 1-partition leg actually runs at 1 partition.
-    _patch(dedup, "_parallel_scan", lambda s, df: df)
+    # parallel_scan would re-repartition an injected 1-partition frame
+    # back to defaultParallelism — make it a pass-through so the
+    # 1-partition leg actually runs at 1 partition. Modules bind the
+    # name at import, so patch it in every package module that does.
+    for mod in list(sys.modules.values()):
+        if getattr(mod, "__name__", "").startswith(
+            "lenses_topology_example_spark."
+        ) and hasattr(mod, "parallel_scan"):
+            _patch(mod, "parallel_scan", lambda s, df: df)
 
     try:
         return _canon_rows(getattr(module, fn_name)(spark, sf_dir))
@@ -103,7 +94,7 @@ def _run_with_parts(spark, sf_dir, module, fn_name, n_parts):
             setattr(obj, attr, orig)
         # memos built under the injected partitioning must not leak
         # into later runs/tests
-        _evict_memos(spark, sf_dir)
+        evict_memos(spark, sf_dir)
 
 
 # (module path, query fn) — the accumulation-order-sensitive classes:

@@ -84,7 +84,7 @@ def test_no_unmemoized_repeated_subplans(catalog_dfs):
     assert not suspects, (
         "repeated-subplan suspects (same base table scanned >= "
         f"{REF_THRESHOLD}x, no memo, in-suite cost > {COST_FLOOR_SEC}s "
-        "— memo-persist the shared frame via dedup._memo_persist, "
+        "— memo-persist the shared frame via memo.persisted, "
         f"re-anchor, and record a first-execution ceiling): {suspects}"
     )
 

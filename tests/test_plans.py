@@ -4,38 +4,30 @@ shuffles) must be visible in the executed plans, not just intended."""
 
 from __future__ import annotations
 
-import contextlib
-import io
 import re
 
 import pytest
 
 from lenses_topology_example_spark.catalog import _CATALOG
 
-
-def _formatted_plan(spark, sf_dir, name: str) -> str:
-    df = _CATALOG[name][0](spark, sf_dir)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from .conftest import formatted_plan
 
 
 def test_fx_join_broadcasts_dim(spark, sf_dir):
-    plan = _formatted_plan(spark, sf_dir, "fx_join")
+    plan = formatted_plan(_CATALOG["fx_join"][0](spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan, "5-row dim must never shuffle the fact"
 
 
 def test_payments_pipeline_single_agg_shuffle(spark, sf_dir):
-    plan = _formatted_plan(spark, sf_dir, "payments_pipeline")
+    plan = formatted_plan(_CATALOG["payments_pipeline"][0](spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     # partial+final HashAggregate around exactly one shuffle of agg output
     assert len(re.findall(r"HashAggregate", plan)) >= 2, "partial agg missing"
 
 
 def test_agg_revenue_pushdown(spark, sf_dir):
-    plan = _formatted_plan(spark, sf_dir, "agg_revenue")
+    plan = formatted_plan(_CATALOG["agg_revenue"][0](spark, sf_dir))
     m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
     assert m and "l_shipdate" in m.group(1), "shipdate filter must reach the scan"
     m = re.search(r"ReadSchema: ([^\n]*)", plan)
@@ -44,7 +36,7 @@ def test_agg_revenue_pushdown(spark, sf_dir):
 
 
 def test_returned_items_pushdown_and_broadcasts(spark, sf_dir):
-    plan = _formatted_plan(spark, sf_dir, "returned_items")
+    plan = formatted_plan(_CATALOG["returned_items"][0](spark, sf_dir))
     m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
     assert m and "EqualTo(l_returnflag,R)" in m.group(1)
     assert "BroadcastHashJoin" in plan
@@ -54,7 +46,7 @@ def test_wordcount_is_native_explode(spark, sf_dir):
     """The reference's typed flatMap (sparkstreaming App.java:74-77) must
     NOT appear as a (Map|FlatMap)Elements/DeserializeToObject plan — the
     tokenizer stays native (Generate explode) inside codegen."""
-    plan = _formatted_plan(spark, sf_dir, "wordcount")
+    plan = formatted_plan(_CATALOG["wordcount"][0](spark, sf_dir))
     assert "Generate" in plan
     assert "DeserializeToObject" not in plan
     assert "MapElements" not in plan
@@ -91,10 +83,7 @@ def test_no_python_udfs_in_oracle_tier(catalog_dfs):
         if sql is None or name not in catalog_dfs:
             continue
         df = catalog_dfs[name]
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
+        plan = formatted_plan(df)
         if name not in python_ok and re.search(
             r"BatchEvalPython|ArrowEvalPython|InPandas", plan
         ):
@@ -108,7 +97,7 @@ def test_no_python_udfs_in_oracle_tier(catalog_dfs):
 def test_topk_uses_take_ordered(spark, sf_dir):
     """orderBy+limit must compile to TakeOrderedAndProject (per-partition
     heap, k rows to the driver) — never a global Sort."""
-    plan = _formatted_plan(spark, sf_dir, "topk_spenders")
+    plan = formatted_plan(_CATALOG["topk_spenders"][0](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
 
 
@@ -118,7 +107,7 @@ def test_sim_topk_is_lazy_single_join(spark, sf_dir):
     unrolled sub-plan per collected query vector — and the rank filter
     must compile to WindowGroupLimit so each input partition emits only
     ~k rows per query before the exchange."""
-    plan = _formatted_plan(spark, sf_dir, "sim_topk")
+    plan = formatted_plan(_CATALOG["sim_topk"][0](spark, sf_dir))
     n_joins = len(re.findall(r"Join", plan))
     assert n_joins >= 1, "join-form plan expected"
     assert "BroadcastNestedLoopJoin" in plan, "query side must broadcast"
@@ -130,7 +119,7 @@ def test_tfidf_partial_topk_and_broadcast_n(spark, sf_dir):
     """tfidf's per-doc top-k must compile to WindowGroupLimit (partial
     top-k before the exchange) and the corpus-count join must broadcast
     its single row, never shuffle the term-doc side for it."""
-    plan = _formatted_plan(spark, sf_dir, "tfidf")
+    plan = formatted_plan(_CATALOG["tfidf"][0](spark, sf_dir))
     assert "WindowGroupLimit" in plan
     assert "BroadcastNestedLoopJoin" in plan  # 1-row N, no join key
     assert "CartesianProduct" not in plan
@@ -142,7 +131,7 @@ def test_seq_packing_single_shard_shuffle(spark, sf_dir):
     ids — `(4) Exchange` appears once in the tree and once in the
     details section, so a raw occurrence count drifts with plan
     formatting (round-2 ADVICE)."""
-    plan = _formatted_plan(spark, sf_dir, "seq_packing")
+    plan = formatted_plan(_CATALOG["seq_packing"][0](spark, sf_dir))
     exchange_ids = set(re.findall(r"\((\d+)\) Exchange\b", plan))
     assert len(exchange_ids) == 1, plan
 
@@ -155,7 +144,7 @@ def test_repetition_stats_zero_shuffle(spark, sf_dir):
     """repetition_stats is pure per-row map work: the top-bigram count
     must come from the sorted-run fold, never an explode+groupBy — so
     the plan has NO exchange at all."""
-    plan = _formatted_plan(spark, sf_dir, "repetition_stats")
+    plan = formatted_plan(_CATALOG["repetition_stats"][0](spark, sf_dir))
     assert not _exchange_ids(plan), plan
     assert "Generate" not in plan, "bigram explode crept in"
 
@@ -165,7 +154,7 @@ def test_corpus_mix_window_over_aggregated_frame(spark, sf_dir):
     single-partition exchange for the global-total window — and that
     window must sit ABOVE the aggregate (a few dozen rows), never over
     the raw corpus."""
-    plan = _formatted_plan(spark, sf_dir, "corpus_mix")
+    plan = formatted_plan(_CATALOG["corpus_mix"][0](spark, sf_dir))
     assert len(_exchange_ids(plan)) == 2, plan
     # partial+final agg pair proves the token sum combines map-side
     assert len(re.findall(r"HashAggregate", plan)) >= 2, plan
@@ -175,7 +164,7 @@ def test_curation_funnel_single_global_agg(spark, sf_dir):
     """curation_funnel computes all four stage counts in ONE aggregate
     over the single scan (partial + final around a 1-row exchange) —
     no per-stage rescans (no Union of aggregates)."""
-    plan = _formatted_plan(spark, sf_dir, "curation_funnel")
+    plan = formatted_plan(_CATALOG["curation_funnel"][0](spark, sf_dir))
     assert "Union" not in plan, "per-stage rescan crept in"
     assert len(re.findall(r"HashAggregate", plan)) >= 2, plan
 
@@ -190,7 +179,7 @@ def test_curation_pipeline_single_scan(spark, sf_dir):
     per-row frames joined back on doc_id (Spark has no cross-branch
     common-subplan elimination, so that shape planned 4 scans + 3
     corpus-scale joins). Only exchange = the fp keeper window."""
-    plan = _formatted_plan(spark, sf_dir, "curation_pipeline")
+    plan = formatted_plan(_CATALOG["curation_pipeline"][0](spark, sf_dir))
     assert len(_scan_ids(plan)) == 1, plan
     assert "Join" not in plan, plan
     assert len(_exchange_ids(plan)) == 1, plan
@@ -199,7 +188,7 @@ def test_curation_pipeline_single_scan(spark, sf_dir):
 def test_curation_funnel_single_scan(spark, sf_dir):
     """Same single-scan/no-join contract as the pipeline; exchanges =
     the fp window + the 1-row global-agg exchange, nothing else."""
-    plan = _formatted_plan(spark, sf_dir, "curation_funnel")
+    plan = formatted_plan(_CATALOG["curation_funnel"][0](spark, sf_dir))
     assert len(_scan_ids(plan)) == 1, plan
     assert "Join" not in plan, plan
     assert len(_exchange_ids(plan)) == 2, plan
@@ -210,7 +199,7 @@ def test_decontaminate_broadcasts_eval_side(spark, sf_dir):
     benchmark suite is tiny vs a 100 TB corpus) — the corpus side
     streams through the membership hash join without a shuffle; the
     only corpus-scale exchange is the per-doc count agg."""
-    plan = _formatted_plan(spark, sf_dir, "decontaminate")
+    plan = formatted_plan(_CATALOG["decontaminate"][0](spark, sf_dir))
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, "eval side fell off the broadcast path"
 
@@ -219,7 +208,7 @@ def test_knn_classify_broadcasts_topk(spark, sf_dir):
     """knn_classify's label lookup must broadcast the |Q| x k neighbor
     triples (bounded by construction) — the corpus-side label fetch
     never sort-merge-shuffles."""
-    plan = _formatted_plan(spark, sf_dir, "knn_classify")
+    plan = formatted_plan(_CATALOG["knn_classify"][0](spark, sf_dir))
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert "WindowGroupLimit" in plan  # inherited sim_topk partial top-k
@@ -229,9 +218,9 @@ def test_dedup_lines_shuffles_hashes_only(spark, sf_dir):
     """dedup_lines: exactly two SEMANTIC exchanges (keeper window keyed
     by the 16-byte md5, then the per-doc agg) and no join; the segment
     TEXT is projected away before the window shuffle. The degenerate-
-    layout guard (_parallel_scan) may add ONE RoundRobin repartition of
+    layout guard (tables.parallel_scan) may add ONE RoundRobin repartition of
     the raw scan — allowed, never more, and only that kind."""
-    plan = _formatted_plan(spark, sf_dir, "dedup_lines")
+    plan = formatted_plan(_CATALOG["dedup_lines"][0](spark, sf_dir))
     rr_ids = set(
         re.findall(
             r"\((\d+)\) Exchange\nInput[^\n]*\n"
@@ -250,14 +239,14 @@ def test_dedup_lines_shuffles_hashes_only(spark, sf_dir):
 
 def test_pii_scrub_zero_shuffle(spark, sf_dir):
     """pii_scrub is pure per-row regex work — no exchange at all."""
-    plan = _formatted_plan(spark, sf_dir, "pii_scrub")
+    plan = formatted_plan(_CATALOG["pii_scrub"][0](spark, sf_dir))
     assert not _exchange_ids(plan), plan
 
 
 def test_token_entropy_zero_shuffle(spark, sf_dir):
     """token_entropy's occurrence counts come from the per-row
     sorted-run fold — no explode+groupBy, no exchange at all."""
-    plan = _formatted_plan(spark, sf_dir, "token_entropy")
+    plan = formatted_plan(_CATALOG["token_entropy"][0](spark, sf_dir))
     assert not _exchange_ids(plan), plan
     assert "Generate" not in plan, "token explode crept in"
 
@@ -275,7 +264,7 @@ def test_lm_score_single_vocab_agg_and_broadcast(spark, sf_dir):
     global-total window below the vocab aggregate (single-partition
     shuffle of EVERY corpus token) puts a Project/Generate there
     instead and fails the positional assert."""
-    plan = _formatted_plan(spark, sf_dir, "lm_score")
+    plan = formatted_plan(_CATALOG["lm_score"][0](spark, sf_dir))
     assert len(_exchange_ids(plan)) == 3, plan
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
@@ -294,7 +283,7 @@ def test_cms_topn_is_take_ordered(spark, sf_dir):
     N_partitions x CMS_TOP rows) — an unpartitioned row_number window
     here would funnel the ENTIRE exact vocabulary (~10^7 rows at web
     scale) through one partition (round-4 verdict)."""
-    plan = _formatted_plan(spark, sf_dir, "cms_token_freq")
+    plan = formatted_plan(_CATALOG["cms_token_freq"][0](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan, plan
     assert not re.search(r"\(\d+\) Window\b", plan), plan
 
@@ -303,7 +292,7 @@ def test_corpus_report_single_scan_single_agg(spark, sf_dir):
     """corpus_report fuses quality/lang/entropy/dup signals as columns
     of one documents projection — one FileScan, no joins, one
     source-keyed agg exchange with map-side partials."""
-    plan = _formatted_plan(spark, sf_dir, "corpus_report")
+    plan = formatted_plan(_CATALOG["corpus_report"][0](spark, sf_dir))
     assert len(_scan_ids(plan)) == 1, plan
     assert "Join" not in plan, plan
     assert len(_exchange_ids(plan)) == 1, plan
@@ -315,7 +304,7 @@ def test_funnel_sweep_single_scan_single_agg(spark, sf_dir):
     the SAME single-scan global aggregate (one corpus scan, no Union of
     per-threshold rescans); the stack() unpivot is a Generate over the
     1-row aggregate, not over data."""
-    plan = _formatted_plan(spark, sf_dir, "funnel_sweep")
+    plan = formatted_plan(_CATALOG["funnel_sweep"][0](spark, sf_dir))
     assert len(_scan_ids(plan)) == 1, plan
     assert "Union" not in plan, "per-threshold rescan crept in"
     assert "Join" not in plan, plan
@@ -325,7 +314,7 @@ def test_shard_plan_window_over_aggregated_frame(spark, sf_dir):
     """shard_plan: one agg exchange keyed by shard plus the
     single-partition exchange for the uniform-load window over the
     N-shard aggregated frame — never a window over the raw corpus."""
-    plan = _formatted_plan(spark, sf_dir, "shard_plan")
+    plan = formatted_plan(_CATALOG["shard_plan"][0](spark, sf_dir))
     assert len(_scan_ids(plan)) == 1, plan
     assert len(_exchange_ids(plan)) == 2, plan
     assert len(re.findall(r"HashAggregate", plan)) >= 2, plan  # partial+final
@@ -335,7 +324,7 @@ def test_corpus_rebalance_window_over_aggregated_frame(spark, sf_dir):
     """corpus_rebalance: same two-exchange discipline as corpus_mix —
     agg keyed by source, then both ratio windows over the
     |sources|-row aggregate."""
-    plan = _formatted_plan(spark, sf_dir, "corpus_rebalance")
+    plan = formatted_plan(_CATALOG["corpus_rebalance"][0](spark, sf_dir))
     assert len(_scan_ids(plan)) == 1, plan
     assert len(_exchange_ids(plan)) == 2, plan
     assert len(re.findall(r"HashAggregate", plan)) >= 2, plan
@@ -347,7 +336,7 @@ def test_dedup_incremental_no_cartesian(spark, sf_dir):
     incoming and base sides would be the quadratic shape the LSH bands
     exist to avoid. Digest membership and band joins are all hash
     equi-joins."""
-    plan = _formatted_plan(spark, sf_dir, "dedup_incremental")
+    plan = formatted_plan(_CATALOG["dedup_incremental"][0](spark, sf_dir))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -356,7 +345,7 @@ def test_lateral_topn_decorrelates_to_window(spark, sf_dir):
     """The LATERAL correlated LIMIT must decorrelate into a ranked
     window join (WindowGroupLimit partial top-k before the exchange) —
     never per-outer-row subquery re-execution or a cartesian."""
-    plan = _formatted_plan(spark, sf_dir, "lateral_topn")
+    plan = formatted_plan(_CATALOG["lateral_topn"][0](spark, sf_dir))
     assert "WindowGroupLimit" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -369,7 +358,9 @@ def test_seg_near_capped_reuses_memoized_keys(spark, sf_dir):
     the explode+hash build re-runs per consumer (r6: 12.5-25.9 s vs the
     5.4-6.3 s band). The memo must surface as >=3 InMemoryTableScans of
     the same cached relation in the plan."""
-    plan = _formatted_plan(spark, sf_dir, "dedup_lines_near_capped")
+    plan = formatted_plan(
+        _CATALOG["dedup_lines_near_capped"][0](spark, sf_dir)
+    )
     assert plan.count("InMemoryTableScan") >= 3, (
         "block-key frame must be read from cache by all three consumers"
     )
@@ -382,7 +373,7 @@ def test_pmi_builds_from_materialized_tokens(spark, sf_dir):
     doc (measured 8 s suite floor at sf0.1, r7). Built correctly, the
     plan reads the memoized token table: InMemoryTableScans and no
     raw-text split inside the gram branch."""
-    plan = _formatted_plan(spark, sf_dir, "pmi_collocations")
+    plan = formatted_plan(_CATALOG["pmi_collocations"][0](spark, sf_dir))
     assert "InMemoryTableScan" in plan
 
 
@@ -392,7 +383,7 @@ def test_hard_negative_mining_partial_topk_broadcast_queries(spark, sf_dir):
     side (corpus scans the |Q|-row broadcast — never the reverse), and
     the rn <= k filter must compile to WindowGroupLimit so only ~k
     quads per query per partition cross the exchange."""
-    plan = _formatted_plan(spark, sf_dir, "hard_negative_mining")
+    plan = formatted_plan(_CATALOG["hard_negative_mining"][0](spark, sf_dir))
     assert "WindowGroupLimit" in plan, "partial top-k pushdown missing"
     assert "BroadcastNestedLoopJoin" in plan
     assert "SortMergeJoin" not in plan, "query set must broadcast, not shuffle"
@@ -402,7 +393,7 @@ def test_small_qty_revenue_broadcasts_brand_parts(spark, sf_dir):
     """Q17 shape: the brand filter must reach the part scan, and both
     lineitem joins must broadcast the pruned part/per-part-average
     sides — lineitem is scanned (twice) but never shuffled."""
-    plan = _formatted_plan(spark, sf_dir, "small_qty_revenue")
+    plan = formatted_plan(_CATALOG["small_qty_revenue"][0](spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan, "lineitem must not shuffle"
     pushed = " ".join(re.findall(r"PushedFilters: \[([^\]]*)\]", plan))
@@ -415,7 +406,7 @@ def test_hybrid_rrf_every_topk_is_window_group_limited(spark, sf_dir):
     only nested-loop joins are the deliberate bounded broadcasts (the
     3-row query-vector frame and the 1-row corpus-stats scalar) — never
     a shuffled cartesian."""
-    plan = _formatted_plan(spark, sf_dir, "hybrid_rrf")
+    plan = formatted_plan(_CATALOG["hybrid_rrf"][0](spark, sf_dir))
     # 3 windows x (partial + final) WindowGroupLimit, twice in the
     # formatted output (tree + details list)
     assert len(re.findall(r"WindowGroupLimit", plan)) >= 6
@@ -431,7 +422,7 @@ def test_rfm_windows_share_one_shuffle(spark, sf_dir):
     that re-exchanges per window triples the shuffle volume for no
     semantic gain. Orders must pre-aggregate (partial+final) before
     the customer join."""
-    plan = _formatted_plan(spark, sf_dir, "rfm_segments")
+    plan = formatted_plan(_CATALOG["rfm_segments"][0](spark, sf_dir))
     assert len(re.findall(r"\(\d+\) Window\b", plan)) >= 3
     nation_exchanges = re.findall(r"hashpartitioning\(c_nationkey", plan)
     assert len(nation_exchanges) == 1, "windows must share one shuffle"
@@ -442,7 +433,7 @@ def test_kmeans_elbow_one_scored_frame(spark, sf_dir):
     """All four K-curves must derive from ONE broadcast cross-join of
     the 16-row centroid set (a plan that re-scans per K would show 4
     joins) and collapse in a single partial+final keyed aggregation."""
-    plan = _formatted_plan(spark, sf_dir, "kmeans_elbow")
+    plan = formatted_plan(_CATALOG["kmeans_elbow"][0](spark, sf_dir))
     assert len(re.findall(r"BroadcastNestedLoopJoin Cross BuildRight", plan)) == 1
     assert "CartesianProduct" not in plan
 
@@ -459,10 +450,7 @@ def _plan_of(catalog_dfs, name: str) -> str:
     from .conftest import SF_DIR
 
     df = _CATALOG[name][0](catalog_dfs[name].sparkSession, SF_DIR)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+    return formatted_plan(df)
 
 
 def test_pareto_frontier_window_is_partitioned(catalog_dfs):
@@ -760,9 +748,6 @@ def test_kmeans_fit_round_is_broadcast_and_group_limited(spark, sf_dir):
     per-vector top-1 window carries WindowGroupLimit so only one row
     per vector reaches the exchange. Pin ONE composed round — the loop
     repeats the same plan."""
-    import contextlib
-    import io
-
     from pyspark.sql import functions as F
 
     from lenses_topology_example_spark.operators.embed_stats import (
@@ -810,10 +795,7 @@ def test_kmeans_fit_round_is_broadcast_and_group_limited(spark, sf_dir):
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == F.lit(1))
     )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        one_round.explain("formatted")
-    plan = buf.getvalue()
+    plan = formatted_plan(one_round)
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     assert "WindowGroupLimit" in plan
     assert "SortMergeJoin" not in plan

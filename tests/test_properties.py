@@ -14,6 +14,8 @@ from pyspark.sql import functions as F
 from lenses_topology_example_spark.functions.texthash import MIX, MOD
 from lenses_topology_example_spark.operators.wordcount import tokens_col
 
+from .conftest import evict_memos
+
 _ascii_line = st.text(
     alphabet=st.characters(min_codepoint=32, max_codepoint=126), max_size=80
 )
@@ -331,7 +333,6 @@ def test_hard_negatives_property_random_labels(spark, sf_dir, labels):
 
     import numpy as np
 
-    import lenses_topology_example_spark.operators.dedup as dmod
     import lenses_topology_example_spark.operators.similarity as smod
     from lenses_topology_example_spark.operators.similarity import (
         N_QUERIES,
@@ -353,13 +354,7 @@ def test_hard_negatives_property_random_labels(spark, sf_dir, labels):
         out = smod.q_hard_negative_mining(spark, token).collect()
     finally:
         smod.load_table = orig
-        with dmod._MATERIALIZED_LOCK:
-            for k in [k for k in dmod._MATERIALIZED if k[1] == token]:
-                try:
-                    dmod._MATERIALIZED[k].unpersist()
-                except Exception:
-                    pass
-                del dmod._MATERIALIZED[k]
+        evict_memos(spark, token)
 
     vecs = {r[0]: np.asarray(r[1], dtype=np.float64) for r in rows}
     labs = {r[0]: r[2] for r in rows}

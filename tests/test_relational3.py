@@ -7,23 +7,15 @@ window-decorrelated min/max-equality subqueries, no cartesian products.
 
 from __future__ import annotations
 
-import contextlib
-import io
 import re
 
 from lenses_topology_example_spark.catalog import _CATALOG
 
-
-def _formatted_plan(spark, sf_dir, name: str) -> str:
-    df = _CATALOG[name][0](spark, sf_dir)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from .conftest import formatted_plan
 
 
 def test_order_priority_count_is_semi_join(spark, sf_dir):
-    plan = _formatted_plan(spark, sf_dir, "order_priority_count")
+    plan = formatted_plan(_CATALOG["order_priority_count"][0](spark, sf_dir))
     assert "LeftSemi" in plan, "EXISTS must plan as a semi join"
     # the quarter filter reaches the orders scan
     m = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
@@ -32,7 +24,7 @@ def test_order_priority_count_is_semi_join(spark, sf_dir):
 
 
 def test_volume_shipping_broadcasts_nation_aliases(spark, sf_dir):
-    plan = _formatted_plan(spark, sf_dir, "volume_shipping")
+    plan = formatted_plan(_CATALOG["volume_shipping"][0](spark, sf_dir))
     # both nation aliases broadcast; shipdate window pushed to the scan
     assert plan.count("BroadcastHashJoin") >= 2
     m = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
@@ -41,7 +33,7 @@ def test_volume_shipping_broadcasts_nation_aliases(spark, sf_dir):
 
 
 def test_market_share_single_agg_pass(spark, sf_dir):
-    plan = _formatted_plan(spark, sf_dir, "market_share")
+    plan = formatted_plan(_CATALOG["market_share"][0](spark, sf_dir))
     # conditional + total sum in ONE aggregation (partial+final pair),
     # not two join branches over lineitem
     assert plan.count("lineitem.parquet") == 1
@@ -50,14 +42,14 @@ def test_market_share_single_agg_pass(spark, sf_dir):
 
 
 def test_product_profit_part_filter_pushdown(spark, sf_dir):
-    plan = _formatted_plan(spark, sf_dir, "product_profit")
+    plan = formatted_plan(_CATALOG["product_profit"][0](spark, sf_dir))
     m = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     assert any("p_name" in f for f in m), "LIKE filter must reach the part scan"
     assert "CartesianProduct" not in plan
 
 
 def test_customer_distribution_left_outer(spark, sf_dir):
-    plan = _formatted_plan(spark, sf_dir, "customer_distribution")
+    plan = formatted_plan(_CATALOG["customer_distribution"][0](spark, sf_dir))
     assert "LeftOuter" in plan, "zero-order customers must survive the join"
     # the priority filter must NOT be pushed to the orders scan as a
     # row-filter that would drop customers — it lives in the join
@@ -65,7 +57,7 @@ def test_customer_distribution_left_outer(spark, sf_dir):
 
 
 def test_top_supplier_decimal_max_window(spark, sf_dir):
-    plan = _formatted_plan(spark, sf_dir, "top_supplier")
+    plan = formatted_plan(_CATALOG["top_supplier"][0](spark, sf_dir))
     assert "Window" in plan
     # the window runs over the aggregated per-supplier frame, never raw
     # lineitem: exactly one lineitem scan feeding one partial+final agg
@@ -73,7 +65,7 @@ def test_top_supplier_decimal_max_window(spark, sf_dir):
 
 
 def test_min_cost_supplier_partitioned_window(spark, sf_dir):
-    plan = _formatted_plan(spark, sf_dir, "min_cost_supplier")
+    plan = formatted_plan(_CATALOG["min_cost_supplier"][0](spark, sf_dir))
     assert "Window" in plan
     assert "CartesianProduct" not in plan
     # per-part window: partition spec present (not an empty-frame window)
@@ -90,14 +82,11 @@ def _final_plan(spark, sf_dir, name: str) -> str:
     final adaptive plan."""
     df = _CATALOG[name][0](spark, sf_dir)
     df.collect()
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+    return formatted_plan(df)
 
 
 def test_shipping_priority_topk_and_pushdown(spark, sf_dir):
-    plan = _formatted_plan(spark, sf_dir, "shipping_priority")
+    plan = formatted_plan(_CATALOG["shipping_priority"][0](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan, "top-10 must not full-sort"
     m = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     assert any("o_orderdate" in f for f in m)
@@ -107,7 +96,7 @@ def test_shipping_priority_topk_and_pushdown(spark, sf_dir):
 
 
 def test_forecast_revenue_zero_join_full_pushdown(spark, sf_dir):
-    plan = _formatted_plan(spark, sf_dir, "forecast_revenue")
+    plan = formatted_plan(_CATALOG["forecast_revenue"][0](spark, sf_dir))
     assert "Join" not in plan and "Exchange hashpartitioning" not in plan
     m = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     assert any(
@@ -127,7 +116,7 @@ def test_important_parts_reuses_value_exchange(spark, sf_dir):
 
 
 def test_parts_supplier_rel_anti_join_and_pruning(spark, sf_dir):
-    plan = _formatted_plan(spark, sf_dir, "parts_supplier_rel")
+    plan = formatted_plan(_CATALOG["parts_supplier_rel"][0](spark, sf_dir))
     assert "LeftAnti" in plan, "excluded suppliers must anti-join"
     assert "BroadcastHashJoin" in plan
     m = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
@@ -137,7 +126,7 @@ def test_parts_supplier_rel_anti_join_and_pruning(spark, sf_dir):
 
 
 def test_discounted_revenue_channel_inside_join(spark, sf_dir):
-    plan = _formatted_plan(spark, sf_dir, "discounted_revenue")
+    plan = formatted_plan(_CATALOG["discounted_revenue"][0](spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     assert plan.count("lineitem.parquet") == 1
     m = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)

@@ -11,21 +11,13 @@ DuckDB oracles is covered for every entry by test_oracle_parity).
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 import numpy as np
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from lenses_topology_example_spark.operators import dedup, embed_stats, quality
 
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from .conftest import formatted_plan
 
 
 # --- gopher_rules ------------------------------------------------------------------
@@ -57,7 +49,7 @@ def test_gopher_mean_word_len_bounds(spark, sf_dir):
 
 
 def test_gopher_rules_zero_shuffle(spark, sf_dir):
-    plan = _plan(quality.q_gopher_rules(spark, sf_dir))
+    plan = formatted_plan(quality.q_gopher_rules(spark, sf_dir))
     assert "Exchange" not in plan, "rule battery must be a pure map"
 
 
@@ -76,7 +68,7 @@ def test_classifier_score_range_and_label(spark, sf_dir):
 
 
 def test_classifier_zero_shuffle(spark, sf_dir):
-    plan = _plan(quality.q_quality_classifier(spark, sf_dir))
+    plan = formatted_plan(quality.q_quality_classifier(spark, sf_dir))
     assert "Exchange" not in plan, "per-row weight fold must not shuffle"
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -119,7 +111,7 @@ def test_ngram_spans_invariants(spark, sf_dir):
 def test_ngram_spans_no_text_in_shuffle(spark, sf_dir):
     # the exchanges must carry (doc_id, h, ...) only — never the token
     # array or raw text; 'Exchange hashpartitioning' keys are h/doc_id
-    plan = _plan(dedup.q_dedup_ngram_spans(spark, sf_dir))
+    plan = formatted_plan(dedup.q_dedup_ngram_spans(spark, sf_dir))
     # formatted mode prints node lines and Arguments separately — match
     # the partitioning expression itself
     assert "hashpartitioning(h#" in plan
@@ -161,7 +153,7 @@ def test_kmeans_assign_partitions_vectors(spark, sf_dir):
 
 
 def test_kmeans_assign_broadcasts_centroids(spark, sf_dir):
-    plan = _plan(embed_stats.q_kmeans_assign(spark, sf_dir))
+    plan = formatted_plan(embed_stats.q_kmeans_assign(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan, "K-row centroid frame must broadcast"
 

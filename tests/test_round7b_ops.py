@@ -10,9 +10,7 @@ the DuckDB oracles is covered for every entry by test_oracle_parity).
 
 from __future__ import annotations
 
-import contextlib
 import hashlib
-import io
 import math
 import re
 
@@ -21,12 +19,7 @@ from pyspark.sql import functions as F
 
 from lenses_topology_example_spark.operators import dedup, embed_stats, text
 
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from .conftest import formatted_plan
 
 
 # --- boilerplate_lines -------------------------------------------------------------
@@ -88,7 +81,7 @@ def test_boilerplate_vs_dedup_lines_totals(spark, sf_dir):
 
 
 def test_boilerplate_no_text_in_shuffle(spark, sf_dir):
-    plan = _plan(dedup.q_boilerplate_lines(spark, sf_dir))
+    plan = formatted_plan(dedup.q_boilerplate_lines(spark, sf_dir))
     assert "hashpartitioning(h#" in plan
     after = plan.split("hashpartitioning", 1)[1]
     assert "text#" not in after and "seg#" not in after, (
@@ -158,9 +151,9 @@ def test_winnow_density_bounds(spark, sf_dir):
 def test_winnow_plan_has_no_exchange(spark, sf_dir):
     """The selection is per-row array math over the materialized
     span-hash table — the query itself must add NO exchange (the only
-    allowed one is the _parallel_scan round-robin inside the cached
+    allowed one is the parallel_scan round-robin inside the cached
     build)."""
-    plan = _plan(dedup.q_winnow_fingerprint(spark, sf_dir))
+    plan = formatted_plan(dedup.q_winnow_fingerprint(spark, sf_dir))
     assert "hashpartitioning" not in plan
     assert "InMemoryTableScan" in plan
 
@@ -198,7 +191,7 @@ def test_doc_chunk_covers_every_token(spark, sf_dir):
 
 
 def test_doc_chunk_plan_has_no_exchange(spark, sf_dir):
-    plan = _plan(text.q_doc_chunk(spark, sf_dir))
+    plan = formatted_plan(text.q_doc_chunk(spark, sf_dir))
     assert "hashpartitioning" not in plan
 
 
@@ -239,7 +232,7 @@ def test_bm25_ranking_is_sound(spark, sf_dir):
 
 
 def test_bm25_plan_broadcasts_and_group_limits(spark, sf_dir):
-    plan = _plan(text.q_bm25_search(spark, sf_dir))
+    plan = formatted_plan(text.q_bm25_search(spark, sf_dir))
     assert "WindowGroupLimit" in plan, "top-k must prune ahead of the sort"
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
@@ -342,7 +335,7 @@ def test_reservoir_exact_k_and_python_reference(spark, sf_dir):
 def test_reservoir_plan_group_limits(spark, sf_dir):
     from lenses_topology_example_spark.operators import sketches
 
-    plan = _plan(sketches.q_reservoir_sample(spark, sf_dir))
+    plan = formatted_plan(sketches.q_reservoir_sample(spark, sf_dir))
     assert "WindowGroupLimit" in plan, (
         "exact-K per group must prune per-partition ahead of the exchange"
     )
@@ -496,7 +489,7 @@ def test_embed_outliers_are_global_bottom_k(spark, sf_dir):
 
 
 def test_embed_outliers_plan_take_ordered(spark, sf_dir):
-    plan = _plan(embed_stats.q_embed_outliers(spark, sf_dir))
+    plan = formatted_plan(embed_stats.q_embed_outliers(spark, sf_dir))
     assert "TakeOrderedAndProject" in plan, "bottom-k must not global-sort"
 
 
